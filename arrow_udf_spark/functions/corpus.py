@@ -58,8 +58,10 @@ def gcd3(a: pd.Series, b: pd.Series, c: pd.Series) -> pd.Series:
 async def gcd_async(a: int, b: int) -> int:
     """Async scalar UDF: batch rows run concurrently on one event loop
     (reference A12 async mode, javascript/mod.rs:954-974; python server
-    io_threads, arrow-udf-remote test_udf.py:189-252).  Same math as gcd —
-    the await point is where a real fn would do IO."""
+    io_threads, arrow-udf-remote test_udf.py:189-252).  A pool of
+    io_threads (here 64) worker coroutines drains each batch in row order,
+    with no Task per row.  Same math as gcd — the await point is where a
+    real fn would do IO."""
     import asyncio
 
     if a is None or b is None:

@@ -25,6 +25,11 @@ Design (SURVEY.md §2.A A1-A4, A11, A12):
   row-level UDF error channel; this wrapper is that channel.
 - ``io_threads=N`` maps each batch over a thread pool (reference python
   server ``io_threads``, __init__.py:75-87) for IO-bound row functions.
+- ``async def`` functions (the reference's async mode, A12,
+  javascript/mod.rs:954-974) run each batch on one event loop: a pool of
+  ``io_threads`` (default 64) worker coroutines drains the rows and writes
+  each result at its row's position, so output stays in row order.  There
+  is no Task per row; a per-call ``timeout`` starts when the call starts.
 
 Serialization note: the closure shipped to executors captures only an
 :class:`_EvalSpec` of plain picklable values (the user fn via cloudpickle,
@@ -39,7 +44,7 @@ import inspect
 from concurrent.futures import ThreadPoolExecutor
 from concurrent.futures import TimeoutError as FuturesTimeout
 from dataclasses import dataclass, field
-from typing import Any, Callable, NamedTuple, Optional, Sequence
+from typing import Any, Callable, Iterator, NamedTuple, Optional, Sequence
 
 import pandas as pd
 from pyspark.sql import Column, DataFrame
@@ -131,8 +136,9 @@ class _EvalSpec(NamedTuple):
     # passes a dummy column that only provides the batch length
     nullary: bool = False
     # coroutine function: rows of a batch run concurrently on one event
-    # loop (reference A12 async mode, javascript/mod.rs:954-974); io_threads
-    # doubles as the concurrency cap
+    # loop (reference A12 async mode, javascript/mod.rs:954-974).  A pool of
+    # io_threads (default 64) worker coroutines drains the batch's rows and
+    # writes results in row order; there is no Task per row
     is_async: bool = False
     # error-column text convention: "message" = bare str(e) (the Rust macro
     # runtime's Display texts, e.g. "division by zero", tests/tests.rs:389),
@@ -175,24 +181,29 @@ def _eval_rows(
     if spec.is_async:
         import asyncio
 
-        async def run_all() -> list[tuple[Any, Optional[str]]]:
-            sem = asyncio.Semaphore(spec.io_threads or 64)
+        # the workers share one row iterator, so each row is called exactly
+        # once, and write at the row's index, so results stay in row order
+        results: list[tuple[Any, Optional[str]]] = [(None, None)] * len(rows)
 
-            async def one(args: tuple) -> tuple[Any, Optional[str]]:
-                async with sem:
-                    try:
-                        coro = fn(*(None if _is_null(a) else a for a in args))
-                        if spec.timeout is not None:
-                            return await asyncio.wait_for(coro, spec.timeout), None
-                        return await coro, None
-                    except asyncio.TimeoutError:
-                        return None, "timeout"
-                    except Exception as e:
-                        return None, fmt(e)
+        async def worker(todo: Iterator[tuple[int, tuple]]) -> None:
+            for i, args in todo:
+                try:
+                    coro = fn(*(None if _is_null(a) else a for a in args))
+                    if spec.timeout is not None:
+                        results[i] = await asyncio.wait_for(coro, spec.timeout), None
+                    else:
+                        results[i] = await coro, None
+                except asyncio.TimeoutError:
+                    results[i] = None, "timeout"
+                except Exception as e:
+                    results[i] = None, fmt(e)
 
-            return await asyncio.gather(*[one(r) for r in rows])
+        async def run_all() -> None:
+            todo = iter(enumerate(rows))
+            workers = min(spec.io_threads or 64, len(rows))
+            await asyncio.gather(*(worker(todo) for _ in range(workers)))
 
-        results = asyncio.run(run_all())
+        asyncio.run(run_all())
     elif spec.timeout is not None:
         # per-call deadline (reference A21, javascript/mod.rs:245-260):
         # run each row on a watchdog pool; late rows become error rows.
@@ -592,6 +603,9 @@ def udf(
     """
     if isinstance(input_types, str):
         input_types = [input_types]
+    if io_threads is not None and io_threads < 0:
+        # a negative cap would leave an async fn's worker pool empty
+        raise ValueError(f"io_threads must be >= 0, got {io_threads}")
 
     _PY_TYPES = {int: "int64", float: "float64", str: "string",
                  bool: "boolean", bytes: "binary"}

@@ -74,16 +74,10 @@ def t(
     # JVM projections or immediately shuffle anyway must NOT pay it (the
     # exchange also blocks scan-level filter pushdown).  At 100 TB the
     # branch never fires: a real scan yields >= parallelism splits.
-    if _FORCE_SPREAD is not None:  # A/B testing knob, never set in production
-        spread = _FORCE_SPREAD
     par = spark.sparkContext.defaultParallelism
     if spread and _scan_parallelism(f"{sf_dir}/{name}.parquet") < max(2, par // 2):
         df = df.repartition(par)
     return df
-
-
-#: None = per-query `spread` argument decides; True/False = force (tests)
-_FORCE_SPREAD: bool | None = None
 
 
 def query(name: str, oracle: str | None = None):

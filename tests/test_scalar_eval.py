@@ -157,6 +157,107 @@ def test_async_fn_timeout_and_error(reg):
     assert pd.isna(out.loc[2, "value"]) and "negative" in out.loc[2, "error"]
 
 
+def test_async_concurrency_cap_and_row_order(reg):
+    """io_threads caps the rows in flight at once, and output stays in row
+    order although rows finish out of order."""
+    import asyncio
+
+    state = {"now": 0, "peak": 0}
+    finished = []
+
+    @udf(input_types=["int"], result_type="int", io_threads=4, registry=reg)
+    async def staggered(x):
+        state["now"] += 1
+        state["peak"] = max(state["peak"], state["now"])
+        for _ in range(x % 5):
+            await asyncio.sleep(0)
+        state["now"] -= 1
+        finished.append(x)
+        return x * 10
+
+    out = staggered._eval(pd.Series(range(50)))
+    assert state["peak"] == 4
+    assert finished != sorted(finished)
+    assert out.tolist() == [x * 10 for x in range(50)]
+
+
+def test_async_timeout_starts_at_call_start(reg):
+    """The deadline is per call: six 0.1 s rows on two workers take at least
+    0.3 s in all, yet each call stays within its 0.3 s timeout; one wedged
+    row times out alone."""
+    import asyncio
+    import time
+
+    @udf(
+        input_types=["int"],
+        result_type="int",
+        fallible=True,
+        io_threads=2,
+        timeout=0.3,
+        registry=reg,
+    )
+    async def nap(x):
+        await asyncio.sleep(5 if x == 99 else 0.1)
+        return x
+
+    t0 = time.monotonic()
+    out = nap._eval(pd.Series([1, 2, 3, 4, 5, 6]))
+    assert time.monotonic() - t0 >= 0.3
+    assert out["value"].tolist() == [1, 2, 3, 4, 5, 6]
+    assert out["error"].tolist() == [None] * 6
+
+    out = nap._eval(pd.Series([1, 2, 99, 4, 5, 6, 7]))
+    assert out.loc[2, "error"] == "timeout" and pd.isna(out.loc[2, "value"])
+    others = [0, 1, 3, 4, 5, 6]
+    assert out.loc[others, "value"].tolist() == [1, 2, 4, 5, 6, 7]
+    assert out.loc[others, "error"].tolist() == [None] * 6
+
+
+def test_async_all_null_batch_skips_workers(reg):
+    """An all-NULL batch under RETURN_NULL_ON_NULL_INPUT leaves no rows to
+    call, so no worker starts, and every output row is NULL."""
+    calls = []
+
+    @udf(
+        input_types=["int"],
+        result_type="int",
+        mode=CallMode.RETURN_NULL_ON_NULL_INPUT,
+        registry=reg,
+    )
+    async def ainc(x):
+        calls.append(x)
+        return x + 1
+
+    out = ainc._eval(pd.Series([None, None, None], dtype="object"))
+    assert len(out) == 3 and out.isna().all()
+    assert calls == []
+
+
+def test_async_non_fallible_raises_first_error_in_row_order(reg):
+    import asyncio
+
+    @udf(input_types=["int"], result_type="int", io_threads=8, registry=reg)
+    async def picky(x):
+        # row 7 fails before row 3 does, so the first error in row order is
+        # not the first to happen
+        for _ in range(5 - x if x < 5 else 0):
+            await asyncio.sleep(0)
+        if x in (3, 7):
+            raise ValueError(f"bad row {x}")
+        return x
+
+    with pytest.raises(RuntimeError, match="^bad row 3$"):
+        picky._eval(pd.Series(range(10)))
+
+
+def test_negative_io_threads_rejected(reg):
+    with pytest.raises(ValueError, match="io_threads"):
+
+        @udf(input_types=["int"], result_type="int", io_threads=-1, registry=reg)
+        async def never(x):
+            return x
+
+
 def test_async_batch_flag_ignored(reg):
     """batch=True on a coroutine fn must not break: forced row-wise."""
     import asyncio
