@@ -11,14 +11,17 @@ arrow-udf-runtime/src/python/mod.rs:456-656):
 
 Spark realization — a genuinely distributed two-phase plan:
 
-  phase 1 (map side):  ``mapInPandas`` over input partitions; each partition
-      locally groups by key and folds its rows into one partial state per
-      key.  Partial states are pickled to a binary column, so only
-      ``O(groups)`` bytes shuffle — the same reason Spark's own hash
-      aggregate does map-side combine.  At 100 TB this is the difference
-      between shuffling the table and shuffling a few KB per key.
-  phase 2 (reduce side): ``groupBy(keys).applyInPandas`` merges partial
-      states with ``merge`` and applies ``finish``.
+  phase 1 (map side): :func:`build_multi_fold` under ``mapInArrow`` over
+      input partitions; each partition locally groups by key and folds its
+      rows into one partial state per key.  Partial states are pickled to a
+      binary column, so only ``O(groups)`` bytes shuffle — the same reason
+      Spark's own hash aggregate does map-side combine.  At 100 TB this is
+      the difference between shuffling the table and shuffling a few KB
+      per key.  ``Registry.sql``'s two-phase rewrite, :meth:`agg` and
+      :meth:`accumulate_or_retract` all run this one fold.
+  phase 2 (reduce side): a native ``collect_list`` of each key's states,
+      then one vectorized pandas UDF per Arrow batch of groups that merges
+      them with ``merge`` and applies ``finish``.
 
 This exercises the reference's ``merge`` exactly the way its distributed
 hosts do (partial + final agg).  Pickle-typed opaque state
@@ -36,15 +39,24 @@ from __future__ import annotations
 
 import pickle
 from dataclasses import dataclass
-from typing import Any, Callable, Iterator, Optional, Sequence
+from itertools import repeat
+from typing import Any, Callable, Optional, Sequence
 
 import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
+from pyspark.sql.functions import pandas_udf
 
 from ..plans.registry import GLOBAL, Registry, Signature
 from ..plans.types import ExtField, parse_type
+
+try:
+    from pyspark.sql.pandas.functions import PandasUDFType
+
+    _GROUPED_AGG = PandasUDFType.GROUPED_AGG
+except ImportError:  # pragma: no cover
+    _GROUPED_AGG = 201
 
 __all__ = ["AggregateFunction", "udaf", "build_multi_fold"]
 
@@ -54,8 +66,11 @@ def build_multi_fold(
     by_n: int,
     arg_ns: Sequence[int],
     bp_kinds: Sequence[tuple],
+    ops_idx: Optional[int] = None,
 ):
-    """Map-side fold for the two-phase SQL rewrite (r11 perf, guide §2.3).
+    """The map-side fold, phase 1 of every two-phase UDAF plan: the
+    ``Registry.sql`` rewrite, :meth:`AggregateFunction.agg` and
+    :meth:`AggregateFunction.accumulate_or_retract` all run it.
 
     Returns a ``mapInArrow`` function over a projection laid out as
     ``[group keys (by_n)] + [udaf-0 args] + ... + [one col per non-star
@@ -77,6 +92,13 @@ def build_multi_fold(
     like Spark's long partial sum (merge order is irrelevant modulo
     2^64); MIN/MAX are order-free.  Order-sensitive partials (float/
     decimal SUM, AVG) never reach this path.
+
+    ``ops_idx`` is the position of a boolean column (after the args): a
+    row where it is true is retracted instead of accumulated, in row order
+    (the reference's ops bitmap, A8), so ``accumulate_batch`` is not used.
+
+    Group keys group as Spark's GROUP BY does (see :func:`_key_series`):
+    a NULL key stays apart from a NaN key, and -0.0 joins 0.0.
     """
     import numpy as np
     import pyarrow as pa
@@ -84,6 +106,7 @@ def build_multi_fold(
     n_udafs = len(udafs)
     creates = [f.create_state for f in udafs]
     accs = [f.accumulate for f in udafs]
+    rets = [f.retract for f in udafs]
     acc_bs = [f.accumulate_batch for f in udafs]
     arg_offs = []
     off = by_n
@@ -114,7 +137,7 @@ def build_multi_fold(
                 continue
             if by_n:
                 keys_pdf = pd.DataFrame(
-                    {f"c{i}": _exact_series(rb.column(i)) for i in range(by_n)}
+                    {f"c{i}": _key_series(rb.column(i)) for i in range(by_n)}
                 )
                 groups = keys_pdf.groupby(
                     [f"c{i}" for i in range(by_n)], dropna=False, sort=False
@@ -144,6 +167,11 @@ def build_multi_fold(
             # picks between them by availability)
             args_lists = [s.tolist() for s in args_sorted]
             order_pa = pa.array(order, pa.int64())
+            ops = (
+                None
+                if ops_idx is None
+                else rb.column(ops_idx).take(order_pa).to_pylist()
+            )
             bp_sorted = {
                 j: rb.column(ci).take(order_pa)
                 for j, (kind, ci) in enumerate(bp_kinds)
@@ -158,29 +186,22 @@ def build_multi_fold(
                     states[k] = sts
                     bps[k] = [None] * len(bp_kinds)
                 for u in range(n_udafs):
-                    if acc_bs[u] is not None and a1 - a0 > 8:
+                    base = arg_offs[u] - by_n
+                    a_cols = range(base, base + arg_ns[u])
+                    if ops is None and acc_bs[u] is not None and a1 - a0 > 8:
                         sts[u] = acc_bs[u](
-                            sts[u],
-                            *[
-                                args_sorted[arg_offs[u] - by_n + a].iloc[
-                                    a0:a1
-                                ]
-                                for a in range(arg_ns[u])
-                            ],
+                            sts[u], *[args_sorted[a].iloc[a0:a1] for a in a_cols]
                         )
-                    else:
-                        st = sts[u]
-                        for row in zip(
-                            *[
-                                args_lists[arg_offs[u] - by_n + a][a0:a1]
-                                for a in range(arg_ns[u])
-                            ]
-                        ):
-                            st = accs[u](
-                                st,
-                                *[None if _is_null(v) else v for v in row],
-                            )
-                        sts[u] = st
+                        continue
+                    vals = [args_lists[a][a0:a1] for a in a_cols]
+                    rows = zip(*vals) if vals else repeat((), a1 - a0)
+                    flags = repeat(False) if ops is None else ops[a0:a1]
+                    st = sts[u]
+                    for retract, row in zip(flags, rows):
+                        st = (rets[u] if retract else accs[u])(
+                            st, *[None if _is_null(v) else v for v in row]
+                        )
+                    sts[u] = st
                 bacc = bps[k]
                 for j, (kind, ci) in enumerate(bp_kinds):
                     if kind == "count_star":
@@ -218,10 +239,14 @@ def build_multi_fold(
         if out_schema is None:  # empty partition, schema unknown
             return
         keys = list(states)
+        # pandas gives a non-float NULL key as NaN/NaT, which from_pandas
+        # reads as NULL; a float NULL key is pd.NA (see _key_series), and
+        # a float NaN key is a value
         cols = [
             pa.array(
                 [_np_unbox(k[i]) for k in keys],
                 type=out_schema.field(i).type,
+                from_pandas=not pa.types.is_floating(out_schema.field(i).type),
             )
             for i in range(by_n)
         ]
@@ -246,15 +271,41 @@ def build_multi_fold(
 def _is_null(v) -> bool:
     # ``v is pd.NA`` must precede ``v != v``: pd.NA != pd.NA is pd.NA,
     # whose truthiness RAISES — the except branch then mis-reported NA as
-    # non-null (masked-int .tolist() yields pd.NA, found by the r11 fold)
+    # non-null (masked-int .tolist() yields pd.NA, found by the r11 fold).
+    # bool() inside the try: an array's ``v != v`` is an array, whose
+    # truthiness raises too (list/map arguments of scalar UDFs)
     try:
-        return v is None or v is pd.NA or v != v
+        return bool(v is None or v is pd.NA or v != v)
     except Exception:
         return False
 
 
-#: Arrow int type id -> pandas masked dtype, for exact null-bearing batches
-def _nullable_int_dtype(t):
+def _fold_series(st, acc, acc_b, *series: pd.Series):
+    """Fold one pandas Series per argument into ``st``: ``accumulate_batch``
+    when the aggregate defines it, else ``accumulate`` row by row with
+    NULL/NaN passed as None.  A function of the protocol callables rather
+    than a method, so a closure that calls it pickles without the
+    :class:`AggregateFunction` (see :meth:`AggregateFunction.as_spark_pfold`)."""
+    if acc_b is not None:
+        return acc_b(st, *series)
+    for row in zip(*[s.tolist() for s in series]):
+        st = acc(st, *[None if _is_null(v) else v for v in row])
+    return st
+
+
+def _merge_finish(merge, finish, blobs):
+    """Merge pickled partial states (NULL blobs skipped) and finish."""
+    state = None
+    for blob in blobs:
+        if blob is None:
+            continue
+        s = pickle.loads(blob)
+        state = s if state is None else merge(state, s)
+    return finish(state) if finish is not None else state
+
+
+#: Arrow int/float type id -> pandas masked dtype, for exact null-bearing batches
+def _masked_dtype(t):
     import pyarrow as pa
 
     return {
@@ -266,6 +317,8 @@ def _nullable_int_dtype(t):
         pa.uint16(): pd.UInt16Dtype(),
         pa.uint32(): pd.UInt32Dtype(),
         pa.uint64(): pd.UInt64Dtype(),
+        pa.float32(): pd.Float32Dtype(),
+        pa.float64(): pd.Float64Dtype(),
     }.get(t)
 
 
@@ -278,19 +331,33 @@ def _exact_series(col) -> pd.Series:
     import pyarrow as pa
 
     if col.null_count and pa.types.is_integer(col.type):
-        return col.to_pandas(types_mapper=_nullable_int_dtype)
+        return col.to_pandas(types_mapper=_masked_dtype)
+    return col.to_pandas()
+
+
+def _key_series(col) -> pd.Series:
+    """Arrow group-key column -> pandas Series that groups as Spark's GROUP
+    BY does.  Float keys turn -0.0 into 0.0, and with NULLs present take a
+    masked dtype built from the Arrow null mask, so a NULL key (pd.NA)
+    stays apart from a NaN key; plain float64 makes both NaN and merges
+    them."""
+    import pyarrow as pa
+    import pyarrow.compute as pc
+
+    if not pa.types.is_floating(col.type):
+        return _exact_series(col)
+    col = pc.add(col, pa.scalar(0.0, col.type))  # IEEE: -0.0 + 0.0 is +0.0
+    if col.null_count:
+        return col.to_pandas(types_mapper=_masked_dtype)
     return col.to_pandas()
 
 
 def _np_unbox(v):
-    """numpy/pandas scalar group key -> plain python (or None) for pa.array."""
-    if v is None:
+    """numpy/pandas scalar group key -> plain python for ``pa.array``.  Only
+    a NULL key (None, or pd.NA from a masked column) becomes None; a NaN
+    key stays NaN."""
+    if v is None or v is pd.NA:
         return None
-    try:
-        if pd.isna(v):
-            return None
-    except (TypeError, ValueError):
-        pass
     return v.item() if hasattr(v, "item") else v
 
 
@@ -346,15 +413,6 @@ class AggregateFunction:
             RuntimeWarning,
             stacklevel=2,
         )
-        from pyspark.sql.functions import pandas_udf
-
-        try:
-            from pyspark.sql.pandas.functions import PandasUDFType
-
-            _GROUPED = PandasUDFType.GROUPED_AGG
-        except ImportError:  # pragma: no cover
-            _GROUPED = 201
-
         create, acc, acc_b, finish = (
             self.create_state,
             self.accumulate,
@@ -363,17 +421,12 @@ class AggregateFunction:
         )
 
         def agg_fn(*series):
-            st = create()
-            if acc_b is not None:
-                st = acc_b(st, *series)
-            else:
-                for row in zip(*[s.tolist() for s in series]):
-                    st = acc(st, *[None if _is_null(v) else v for v in row])
+            st = _fold_series(create(), acc, acc_b, *series)
             return finish(st) if finish is not None else st
 
         agg_fn.__name__ = self.sig.name
         udf = pandas_udf(
-            agg_fn, returnType=self.result_field.dtype, functionType=_GROUPED
+            agg_fn, returnType=self.result_field.dtype, functionType=_GROUPED_AGG
         )
         self._grouped_agg_cache = udf
         return udf
@@ -395,58 +448,30 @@ class AggregateFunction:
         O(groups x 32) pickled states.  The one inherent cost SQL can't
         avoid — Python aggregates get no JVM map-side combine, so rows
         shuffle once either way — is shared with every GROUP BY surface;
-        the DataFrame :meth:`agg` path (mapInPandas partials, zero row
-        shuffle) remains the pipeline-grade option.
+        the DataFrame :meth:`agg` path (map-side ``mapInArrow`` partials,
+        zero row shuffle) remains the pipeline-grade option.
         """
-        from pyspark.sql.functions import pandas_udf
-
-        try:
-            from pyspark.sql.pandas.functions import PandasUDFType
-
-            _GROUPED = PandasUDFType.GROUPED_AGG
-        except ImportError:  # pragma: no cover
-            _GROUPED = 201
-
         create, acc, acc_b = self.create_state, self.accumulate, self.accumulate_batch
 
         def partial_fn(*series):
-            st = create()
-            if acc_b is not None:
-                st = acc_b(st, *series)
-            else:
-                for row in zip(*[s.tolist() for s in series]):
-                    st = acc(st, *[None if _is_null(v) else v for v in row])
-            return pickle.dumps(st)
+            return pickle.dumps(_fold_series(create(), acc, acc_b, *series))
 
         partial_fn.__name__ = f"{self.sig.name}__partial"
-        return pandas_udf(partial_fn, returnType=T.BinaryType(), functionType=_GROUPED)
+        return pandas_udf(
+            partial_fn, returnType=T.BinaryType(), functionType=_GROUPED_AGG
+        )
 
     def as_spark_grouped_agg_merge(self):
         """SQL two-phase surface, phase 2: merge pickled partial states and
         finish (see :meth:`as_spark_grouped_agg_partial`)."""
-        from pyspark.sql.functions import pandas_udf
-
-        try:
-            from pyspark.sql.pandas.functions import PandasUDFType
-
-            _GROUPED = PandasUDFType.GROUPED_AGG
-        except ImportError:  # pragma: no cover
-            _GROUPED = 201
-
         merge, finish = self.merge, self.finish
 
         def merge_fn(blobs):
-            state = None
-            for blob in blobs:
-                if blob is None:
-                    continue
-                s = pickle.loads(blob)
-                state = s if state is None else merge(state, s)
-            return finish(state) if finish is not None else state
+            return _merge_finish(merge, finish, blobs)
 
         merge_fn.__name__ = f"{self.sig.name}__merge"
         return pandas_udf(
-            merge_fn, returnType=self.result_field.dtype, functionType=_GROUPED
+            merge_fn, returnType=self.result_field.dtype, functionType=_GROUPED_AGG
         )
 
     # ------------------------------------------------------------------
@@ -472,9 +497,10 @@ class AggregateFunction:
         pickle the AggregateFunction — a cached wrapper attribute makes
         the instance unpicklable (found by the r10 replica sweep).
         """
-        from pyspark.sql.functions import pandas_udf
-
         create, acc, acc_b = self.create_state, self.accumulate, self.accumulate_batch
+        # the row loop reads object Series: an inferred one turns a
+        # NULL-bearing int64 column into float64, losing bits above 2^53
+        dtype = None if acc_b is not None else object
 
         def pfold_fn(vals: pd.Series) -> pd.Series:
             out = []
@@ -482,19 +508,12 @@ class AggregateFunction:
                 st = create()
                 if arr is not None and len(arr) > 0:
                     ks = [f"a{i}" for i in range(len(arr[0]))]
-                    if acc_b is not None:
-                        st = acc_b(
-                            st, *[pd.Series([r[k] for r in arr]) for k in ks]
-                        )
-                    else:
-                        for r in arr:
-                            st = acc(
-                                st,
-                                *[
-                                    None if _is_null(r[k]) else r[k]
-                                    for k in ks
-                                ],
-                            )
+                    st = _fold_series(
+                        st,
+                        acc,
+                        acc_b,
+                        *[pd.Series([r[k] for r in arr], dtype=dtype) for k in ks],
+                    )
                 out.append(pickle.dumps(st))
             return pd.Series(out, dtype=object)
 
@@ -512,127 +531,19 @@ class AggregateFunction:
         merge commutative+associative, so the result is unchanged.
 
         NOT memoized on the instance (see :meth:`as_spark_pfold`)."""
-        from pyspark.sql.functions import pandas_udf
-
         merge, finish = self.merge, self.finish
 
         def mergevec_fn(blob_lists: pd.Series) -> pd.Series:
-            out = []
-            for blobs in blob_lists:
-                state = None
-                if blobs is not None:
-                    for blob in blobs:
-                        if blob is None:
-                            continue
-                        s = pickle.loads(blob)
-                        state = s if state is None else merge(state, s)
-                out.append(finish(state) if finish is not None else state)
-            return pd.Series(out, dtype=object)
+            return pd.Series(
+                [
+                    _merge_finish(merge, finish, () if blobs is None else blobs)
+                    for blobs in blob_lists
+                ],
+                dtype=object,
+            )
 
         mergevec_fn.__name__ = f"{self.sig.name}__mergevec"
         return pandas_udf(mergevec_fn, returnType=self.result_field.dtype)
-
-    # ------------------------------------------------------------------
-    def _fold_partition(
-        self, by_n: int, arg_n: int, ops_col: bool
-    ) -> Callable[[Iterator[pd.DataFrame]], Iterator[pd.DataFrame]]:
-        """Phase-1 worker: partition -> one pickled partial state per key."""
-        create, acc, ret = self.create_state, self.accumulate, self.retract
-        acc_batch = self.accumulate_batch
-
-        if acc_batch is not None and not ops_col:
-
-            def fold_vec(batches):
-                """Arrow-native phase 1 (fed by ``mapInArrow``): int columns
-                with NULLs convert to pandas masked ``Int64`` — exact to all
-                64 bits — instead of mapInPandas' lossy float64 coercion
-                (which silently destroys hash/int bits above 2^53)."""
-                import numpy as np
-                import pyarrow as pa
-
-                states: dict[tuple, Any] = {}
-                out_schema = None
-                for rb in batches:
-                    if out_schema is None:
-                        out_schema = pa.schema(
-                            [
-                                pa.field(f"k{i}", rb.schema.field(i).type)
-                                for i in range(by_n)
-                            ]
-                            + [pa.field("state", pa.binary())]
-                        )
-                    if rb.num_rows == 0:
-                        continue
-                    arg_series = [
-                        _exact_series(rb.column(by_n + i)) for i in range(arg_n)
-                    ]
-                    if by_n:
-                        # _exact_series for KEYS too: int64 keys in a
-                        # NULL-bearing batch must not round-trip through
-                        # float64 (2^53+1 and 2^53 would merge into one
-                        # group under a silently-corrupted key)
-                        keys_pdf = pd.DataFrame(
-                            {f"c{i}": _exact_series(rb.column(i)) for i in range(by_n)}
-                        )
-                        groups = keys_pdf.groupby(
-                            [f"c{i}" for i in range(by_n)], dropna=False, sort=False
-                        ).indices
-                    else:
-                        groups = {(): np.arange(rb.num_rows)}
-                    for key, idx in groups.items():
-                        k = key if isinstance(key, tuple) else (key,)
-                        st = states.get(k)
-                        if st is None and k not in states:
-                            st = create()
-                        states[k] = acc_batch(
-                            st,
-                            *[
-                                s.iloc[idx].reset_index(drop=True)
-                                for s in arg_series
-                            ],
-                        )
-                if out_schema is None:  # empty partition, schema unknown
-                    return
-                cols = [
-                    pa.array(
-                        [_np_unbox(k[i]) for k in states],
-                        type=out_schema.field(i).type,
-                    )
-                    for i in range(by_n)
-                ] + [pa.array([pickle.dumps(s) for s in states.values()], pa.binary())]
-                yield pa.RecordBatch.from_arrays(cols, schema=out_schema)
-
-            return fold_vec
-
-        def fold(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-            states: dict[tuple, Any] = {}
-            key_rows: dict[tuple, tuple] = {}
-            for pdf in batches:
-                cols = [pdf.iloc[:, i].tolist() for i in range(pdf.shape[1])]
-                n = len(pdf)
-                for r in range(n):
-                    key = tuple(cols[i][r] for i in range(by_n))
-                    args = [
-                        None if _is_null(v) else v
-                        for v in (cols[by_n + i][r] for i in range(arg_n))
-                    ]
-                    st = states.get(key)
-                    if st is None and key not in states:
-                        st = create()
-                        key_rows[key] = key
-                    if ops_col:
-                        is_retract = bool(cols[by_n + arg_n][r])
-                        st = ret(st, *args) if is_retract else acc(st, *args)
-                    else:
-                        st = acc(st, *args)
-                    states[key] = st
-            out = [key_rows[k] + (pickle.dumps(s),) for k, s in states.items()]
-            names = [f"k{i}" for i in range(by_n)] + ["state"]
-            yield pd.DataFrame(out, columns=names) if out else pd.DataFrame(
-                columns=names
-            )
-
-        return fold
 
     # ------------------------------------------------------------------
     def agg(
@@ -642,25 +553,33 @@ class AggregateFunction:
         args: Sequence[str],
         _ops_col: Optional[str] = None,
     ) -> DataFrame:
-        """Distributed grouped aggregation: ``by`` key cols, ``args`` inputs."""
+        """Distributed grouped aggregation: ``by`` key cols, ``args`` inputs.
+
+        Phase 1 is :func:`build_multi_fold`, the same map-side ``mapInArrow``
+        fold the ``Registry.sql`` rewrite and :meth:`accumulate_or_retract`
+        run (``_ops_col`` is the latter's retract column); phase 2 merges
+        each key's pickled states and finishes them."""
         by = list(by)
         args = list(args)
-        sel = by + args + ([_ops_col] if _ops_col else [])
-        proj = df.select(*sel)
-
-        phase1_schema = T.StructType(
-            [T.StructField(f"k{i}", df.schema[c].dataType) for i, c in enumerate(by)]
-            + [T.StructField("state", T.BinaryType())]
-        )
-        fold = self._fold_partition(len(by), len(args), _ops_col is not None)
-        if self.accumulate_batch is not None and _ops_col is None:
-            # Arrow-native phase 1: exact nullable-int batches (no float64
-            # coercion of NULL-bearing int columns) and one less conversion
-            partials = proj.mapInArrow(fold, schema=phase1_schema)
-        else:
-            partials = proj.mapInPandas(fold, schema=phase1_schema)
-
         knames = [f"k{i}" for i in range(len(by))]
+        proj = df.select(
+            *[F.col(c).alias(k) for c, k in zip(by, knames)],
+            *args,
+            *([_ops_col] if _ops_col else []),
+        )
+        phase1_schema = T.StructType(
+            [T.StructField(k, df.schema[c].dataType) for c, k in zip(by, knames)]
+            + [T.StructField("__st0", T.BinaryType())]
+        )
+        fold = build_multi_fold(
+            [self],
+            len(by),
+            [len(args)],
+            (),
+            ops_idx=len(by) + len(args) if _ops_col else None,
+        )
+        partials = proj.mapInArrow(fold, schema=phase1_schema)
+
         # merge+finish VECTORIZED (r10 perf): a native collect_list of the
         # O(partitions)-bounded pickled states per key (map-side partial,
         # codegen) and ONE scalar pandas UDF invocation per Arrow batch of
@@ -669,7 +588,7 @@ class AggregateFunction:
         # order stays arbitrary (UDAF contract: commutative+associative).
         result = (
             partials.groupBy(*knames)
-            .agg(F.collect_list("state").alias("__aus_states"))
+            .agg(F.collect_list("__st0").alias("__aus_states"))
             .select(
                 *knames,
                 self.as_spark_mergevec()(F.col("__aus_states")).alias(
@@ -694,7 +613,10 @@ class AggregateFunction:
     ) -> DataFrame:
         """Mixed accumulate/retract batch (reference ops bitmap, A8).
 
-        Rows where ``ops_col`` is true are retracted (inverse-folded).
+        Rows where ``ops_col`` is true are retracted (inverse-folded).  It
+        runs :meth:`agg`, so retraction happens in the same map-side fold
+        (:func:`build_multi_fold`) as ``.agg`` and the ``Registry.sql``
+        rewrite.
         """
         if self.retract is None:
             raise ValueError(f"aggregate {self.sig.name} does not define retract")

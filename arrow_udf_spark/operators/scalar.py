@@ -61,6 +61,7 @@ except ImportError:  # pragma: no cover
 
 from ..plans.registry import GLOBAL, Registry, Signature
 from ..plans.types import ExtField, expand_signature, parse_type, struct_to_row
+from .aggregate import _is_null
 
 __all__ = ["CallMode", "ScalarFunction", "udf"]
 
@@ -70,14 +71,6 @@ class CallMode(enum.Enum):
 
     CALLED_ON_NULL_INPUT = "called_on_null_input"
     RETURN_NULL_ON_NULL_INPUT = "return_null_on_null_input"
-
-
-def _is_null(v: Any) -> bool:
-    # covers None, float('nan'), pandas NA/NaT without importing numpy paths
-    try:
-        return v is None or v != v or v is pd.NA
-    except Exception:
-        return False
 
 
 _INT_DTYPES = {

@@ -33,18 +33,12 @@ from pyspark.sql import types as T
 
 from ..plans.registry import GLOBAL, Registry, Signature
 from ..plans.types import ExtField, parse_type
+from .aggregate import _is_null
 
 __all__ = ["TableFunction", "udtf", "BATCH_SIZE"]
 
 #: reference BATCH_SIZE (codegen_utils.rs:642); output re-chunk unit
 BATCH_SIZE = 1024
-
-
-def _is_null(v) -> bool:
-    try:
-        return v is None or v != v or v is pd.NA
-    except Exception:
-        return False
 
 
 def _sync_gen(fn: Callable) -> Callable:

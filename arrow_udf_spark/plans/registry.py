@@ -390,32 +390,45 @@ class Registry:
         if not used:
             return spark.sql(query)
         self.register_sql(spark)
-        rewritten = self._rewrite_two_phase(query, used, spark=spark)
-        if rewritten is None:
-            if self._strict_sql:
-                raise ValueError(
-                    "query shape not rewritable to two-phase aggregation "
-                    "and strict SQL mode refuses the single-phase "
-                    "GROUPED_AGG fallback (every row of a group on one "
-                    "worker). Simplify the query to a provable shape "
-                    "(single GROUP BY block, plain column group keys, "
-                    "no subqueries in the select list / HAVING / ORDER "
-                    "BY), or use the DataFrame "
-                    "AggregateFunction.agg(df, by=..., args=...) path, "
-                    "or re-register with register_sql(strict=False)."
-                )
-            warnings.warn(
-                "query shape not rewritable to two-phase aggregation; "
-                "running single-phase GROUPED_AGG (every row of a group "
-                "moves to one worker)",
-                RuntimeWarning,
-                stacklevel=2,
+        # the __aus_fold_N views a rewrite registers are needed only until
+        # spark.sql has analyzed the query; a fallback uses none of them
+        views: list[str] = []
+        try:
+            rewritten = self._rewrite_two_phase(
+                query, used, spark=spark, views=views
             )
-            return spark.sql(query)
-        return spark.sql(rewritten)
+            if rewritten is not None:
+                return spark.sql(rewritten)
+        finally:
+            for v in views:
+                spark.catalog.dropTempView(v)
+        if self._strict_sql:
+            raise ValueError(
+                "query shape not rewritable to two-phase aggregation "
+                "and strict SQL mode refuses the single-phase "
+                "GROUPED_AGG fallback (every row of a group on one "
+                "worker). Simplify the query to a provable shape "
+                "(single GROUP BY block, plain column group keys, "
+                "no subqueries in the select list / HAVING / ORDER "
+                "BY), or use the DataFrame "
+                "AggregateFunction.agg(df, by=..., args=...) path, "
+                "or re-register with register_sql(strict=False)."
+            )
+        warnings.warn(
+            "query shape not rewritable to two-phase aggregation; "
+            "running single-phase GROUPED_AGG (every row of a group "
+            "moves to one worker)",
+            RuntimeWarning,
+            stacklevel=2,
+        )
+        return spark.sql(query)
 
     def _rewrite_two_phase(
-        self, query: str, used: set[str], spark: "SparkSession | None" = None
+        self,
+        query: str,
+        used: set[str],
+        spark: "SparkSession | None" = None,
+        views: Optional[list] = None,
     ) -> Optional[str]:
         """Rewrite to the scale-safe composed form.
 
@@ -483,7 +496,7 @@ class Registry:
                     # must analyze the block's source standalone) falls
                     # back to the pure-SQL pipeline when the block
                     # references a CTE name.
-                    rb = self._rewrite_two_phase(blk, used, spark=spark)
+                    rb = self._rewrite_two_phase(blk, used, spark=spark, views=views)
                     if rb is None:
                         return None
                 parts.append((rb, op))
@@ -501,7 +514,7 @@ class Registry:
             if expanded is None:
                 return None
             core, outer_items, tail = expanded
-            rb = self._rewrite_two_phase(core, used, spark=spark)
+            rb = self._rewrite_two_phase(core, used, spark=spark, views=views)
             if rb is None:
                 return None
             # the outermost projection applies the PUBLIC pivot column
@@ -526,7 +539,9 @@ class Registry:
             re.search(rf"(?i)\b{re.escape(n)}\s*\(", where_txt)
             for n in used
         ):
-            dc = self._decorrelate_where(frm_txt, where_txt, used, spark=spark)
+            dc = self._decorrelate_where(
+                frm_txt, where_txt, used, spark=spark, views=views
+            )
             if dc is None:
                 return None
             frm_txt, where_txt = dc
@@ -931,6 +946,7 @@ class Registry:
         if spark is not None:
             u_from = self._build_mapfold_view(
                 spark,
+                views,
                 f"{cte_prefix} " if cte_prefix else "",
                 src,
                 grp_items,
@@ -1005,6 +1021,7 @@ class Registry:
     def _build_mapfold_view(
         self,
         spark,
+        views: Optional[list],
         pre: str,
         src: str,
         grp_items: list,
@@ -1019,7 +1036,8 @@ class Registry:
         foldable built-in partials, all BEFORE any exchange.  The view's
         columns are exactly what the U subquery's merge expressions
         reference (``g_names`` + ``__st{i}`` + ``__bp{j}``), so the
-        caller only swaps U's FROM clause.
+        caller only swaps U's FROM clause.  The view's name is appended to
+        ``views``, for the caller to drop once the query is analyzed.
 
         Returns the view name, or None when the shape is unprovable —
         qualified group keys, a built-in partial whose type is not
@@ -1073,9 +1091,9 @@ class Registry:
             by_n = len(g_names)
             bp_base = by_n + sum(arg_ns)
             int_t = (T.ByteType, T.ShortType, T.IntegerType, T.LongType)
+            # float MIN/MAX stays on native partials: Spark orders NaN above
+            # every number, which the fold's min_max and < / > do not
             mm_t = int_t + (
-                T.FloatType,
-                T.DoubleType,
                 T.StringType,
                 T.DateType,
                 T.TimestampType,
@@ -1126,6 +1144,8 @@ class Registry:
             view_df = df_src.mapInArrow(fold, schema=T.StructType(out_fields))
             name = f"__aus_fold_{next(self._MAPFOLD_SEQ)}"
             view_df.createOrReplaceTempView(name)
+            if views is not None:
+                views.append(name)
             return name
         except Exception:
             return None  # unprovable — pure-SQL pipeline handles it
@@ -1315,7 +1335,7 @@ class Registry:
     }
 
     def _decorrelate_where(
-        self, frm: str, where: str, used: set, spark=None
+        self, frm: str, where: str, used: set, spark=None, views=None
     ) -> Optional[tuple[str, str]]:
         """Decorrelate every UDAF-headed correlated scalar aggregate
         subquery in a WHERE conjunction — the TPC-H q17 shape:
@@ -1354,7 +1374,9 @@ class Registry:
             ):
                 new_pieces.append(piece)
                 continue
-            rep = self._decorrelate_conjunct(piece, used, ci, spark=spark)
+            rep = self._decorrelate_conjunct(
+                piece, used, ci, spark=spark, views=views
+            )
             if rep is None:
                 return None  # a UDAF call we cannot make scale-safe
             conjuncts, derived = rep
@@ -1369,7 +1391,7 @@ class Registry:
         )
 
     def _decorrelate_conjunct(
-        self, piece: str, used: set, ci: int, spark=None
+        self, piece: str, used: set, ci: int, spark=None, views=None
     ) -> Optional[tuple[list[str], str]]:
         """One conjunct ``lhs OP (SELECT ...)`` → (replacement conjunct
         list, derived-table SQL).  See _decorrelate_where."""
@@ -1537,7 +1559,7 @@ class Registry:
             # side; the two-phase global agg is the worst single-phase
             # case this front door exists for)
             sub_sql = f"SELECT {item_s} AS __cv FROM {tbl}{inner_where}"
-        sub_rw = self._rewrite_two_phase(sub_sql, used, spark=spark)
+        sub_rw = self._rewrite_two_phase(sub_sql, used, spark=spark, views=views)
         if sub_rw is None:
             return None
         out_conds = [f"{lhs} {op} {alias}.__cv"]

@@ -34,7 +34,7 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 
-from ..operators.aggregate import AggregateFunction
+from ..operators.aggregate import AggregateFunction, _fold_series
 
 __all__ = [
     "windowed_agg",
@@ -153,11 +153,10 @@ def streaming_running_agg(
         + [T.StructField(agg.sig.name, agg.result_field.dtype)]
         + ([T.StructField("__seq", T.LongType())] if emit_seq else [])
     )
-    create, acc, acc_b, merge, finish = (
+    create, acc, acc_b, finish = (
         agg.create_state,
         agg.accumulate,
         agg.accumulate_batch,
-        agg.merge,
         agg.finish,
     )
 
@@ -170,11 +169,7 @@ def streaming_running_agg(
             st, seen = create(), 0
         for pdf in pdfs:
             seen += len(pdf)
-            if acc_b is not None:
-                st = acc_b(st, *[pdf[a] for a in args])
-            else:
-                for row in pdf.itertuples(index=False):
-                    st = acc(st, *[getattr(row, a) for a in args])
+            st = _fold_series(st, acc, acc_b, *[pdf[a] for a in args])
         state.update((pickle.dumps((st, seen)),))
         value = finish(st) if finish is not None else st
         out = dict(zip(by, key)) | {agg.sig.name: value}
@@ -250,11 +245,7 @@ def streaming_running_agg_tws(
                 else create()
             )
             for pdf in rows:
-                if acc_b is not None:
-                    st = acc_b(st, *[pdf[a] for a in args])
-                else:
-                    for row in pdf.itertuples(index=False):
-                        st = acc(st, *[getattr(row, a) for a in args])
+                st = _fold_series(st, acc, acc_b, *[pdf[a] for a in args])
             self._state.update((pickle.dumps(st),))
             value = finish(st) if finish is not None else st
             yield pd.DataFrame([dict(zip(by, key)) | {name: value}])

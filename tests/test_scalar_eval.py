@@ -334,3 +334,14 @@ def test_result_type_inference(reg):
         return None if s is None else s.upper()
 
     assert shout.sig.return_type == "string"
+
+
+def test_row_eval_masked_null_is_none(reg):
+    """A masked-int NULL (pd.NA) reaches a row fn as None, like any NULL."""
+
+    @udf(["bigint"], "boolean", registry=reg)
+    def isnone(x):
+        return x is None
+
+    out = isnone._eval(pd.Series([1, None], dtype="Int64"))
+    assert out.tolist() == [False, True]
